@@ -17,8 +17,10 @@ import graft.queries.{CdcQueries, HardeningQueries, LlmQueries, RelationalQuerie
   *
   * Every query has a DuckDB oracle in [[oracleSql]] — the hash-based
   * operators (minhash/simhash/LSH) run on portable polynomial hashes
-  * in their gated form (see [[graft.functions.PolyHash]]), with
-  * xxhash64 as the production default verified in ScalaTest.
+  * (see [[graft.functions.PolyHash]]), which DuckDB restates exactly.
+  * Minhash and mixing have no other hash family; simhash keeps a
+  * 64-bit xxhash64 variant for production-scale blocking, checked by
+  * ScalaTest only.
   */
 object SparkEntry {
 

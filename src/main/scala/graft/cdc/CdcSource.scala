@@ -65,20 +65,4 @@ object CdcSource {
         BinlogParser.parseText(text, table, seqStart = idx * SeqWindow)
       }
   }
-
-  /** Parse (fileName, wholeFileText) pairs — separated from the FS read
-    * for testability. Ranking here derives from the dataset's own
-    * distinct names (small: one row per file). */
-  def parseFiles(files: Dataset[(String, String)],
-      table: String = BinlogParser.DefaultTable): Dataset[ChangeEvent] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val names = files.select("_1").distinct().as[String].collect()
-    val rank = names.sortBy(binlogKey).zipWithIndex.toMap
-    val rankB = spark.sparkContext.broadcast(rank)
-    files.flatMap { case (name, text) =>
-      BinlogParser.parseText(text, table,
-        seqStart = rankB.value(name) * SeqWindow)
-    }
-  }
 }

@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.core.Schemas.{ChangeEvent, NetChange}
+import graft.core.Schemas.ChangeEvent
 
 /** Per-(day, pk) last-write-wins consolidation (C5,
   * `Parquet Export/consolidate.cpp:56-109`).
@@ -33,7 +33,8 @@ import graft.core.Schemas.{ChangeEvent, NetChange}
 object Consolidate {
 
   /** Consolidate a batch of events into net changes, one row per
-    * (day, id). Column contract: NetChange. */
+    * (day, id): (day, id, op, date_time, value, ts), where op is "I"
+    * (upsert), "U" (update-if-exists) or "D" (delete). */
   def netChanges(events: Dataset[ChangeEvent]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -57,12 +58,5 @@ object Consolidate {
         $"last_iu.date_time".as("date_time"),
         $"last_iu.value".as("value"),
         $"last_iu.ts".as("ts"))
-  }
-
-  /** Typed variant. */
-  def netChangesTyped(events: Dataset[ChangeEvent]): Dataset[NetChange] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    netChanges(events).as[NetChange]
   }
 }

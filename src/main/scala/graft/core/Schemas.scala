@@ -30,12 +30,6 @@ object Schemas {
   val MinDate = "2010-01-02 00:00:00"
 
   /** The exported lake row (`consolidate.cpp:124-128`). */
-  final case class TimeseriesRow(
-      id: Long,
-      date_time: String,
-      value: Option[Double],
-      ts: String)
-
   val timeseriesSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("date_time", StringType, nullable = false),
@@ -64,15 +58,6 @@ object Schemas {
       seq: Long) {
     def day: String = dateTime.substring(0, 10)
   }
-
-  /** Consolidated net effect per (day, pk) — output of C5, input of M1. */
-  final case class NetChange(
-      day: String,
-      id: Long,
-      op: String, // "I" (upsert) | "U" (update-if-exists) | "D" (delete)
-      date_time: String,
-      value: Option[Double],
-      ts: String)
 
   /** Monitoring snapshot shape (`Email Node Status/watcher.py:81-121`). */
   final case class ReplicationStatus(

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native cosine similarity over two `ARRAY<DOUBLE>` columns.
   *
   * Functionally identical to the higher-order-function composition in
-  * [[graft.llm.TextFunctions.cosine]] (same left-to-right accumulation
+  * the test-side `HofReference.cosine` (same left-to-right accumulation
   * order, same zero-norm -> 0.0 convention), but evaluated as a single
   * fused loop: the HOF form materializes a zip_with array and runs
   * three lambda-driven aggregates per row, while this expression
@@ -102,14 +102,6 @@ object GraftFunctions {
         "graft_simhash64",
         exprs => SimHash64(exprs.head), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_minhash_sig",
-        exprs => MinHashSig(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_poly_minhash_sig",
-        exprs => PolyMinHashSig(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_poly_simhash",
         exprs => PolySimHash(exprs.head), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -130,10 +122,6 @@ object GraftFunctions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_winnow_fingerprints",
         exprs => WinnowFingerprints(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_poly_minhash_longs",
-        exprs => PolyMinHashLongs(exprs(0),
           exprs(1).eval().asInstanceOf[Int]), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_poly_minhash_wide",
@@ -245,16 +233,6 @@ object GraftFunctions {
     call_function("graft_simhash64", tokens)
 
   /** Column form (requires [[register]] on the session first). */
-  def minhashSig(shingles: Column, k: Int): Column =
-    call_function("graft_minhash_sig", shingles,
-      org.apache.spark.sql.functions.lit(k))
-
-  /** Column form (requires [[register]] on the session first). */
-  def polyMinhashSig(shingles: Column, k: Int): Column =
-    call_function("graft_poly_minhash_sig", shingles,
-      org.apache.spark.sql.functions.lit(k))
-
-  /** Column form (requires [[register]] on the session first). */
   def polySimhash(tokens: Column): Column =
     call_function("graft_poly_simhash", tokens)
 
@@ -281,11 +259,6 @@ object GraftFunctions {
   def winnowFingerprints(hashes: Column, w: Int): Column =
     call_function("graft_winnow_fingerprints", hashes,
       org.apache.spark.sql.functions.lit(w))
-
-  /** Column form (requires [[register]] on the session first). */
-  def polyMinhashLongs(hashes: Column, k: Int): Column =
-    call_function("graft_poly_minhash_longs", hashes,
-      org.apache.spark.sql.functions.lit(k))
 
   /** Column form (requires [[register]] on the session first). */
   def polyMinhashWide(hashes: Column, k: Int): Column =

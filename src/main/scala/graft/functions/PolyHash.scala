@@ -7,17 +7,15 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Portable-hash variants of the signature kernels.
+/** Portable-hash signature kernels: the only minhash family.
   *
-  * Same one-pass native shape as [[MinHashSig]] / [[SimHash64]], but
-  * the per-element hash is a base-31 polynomial over Unicode code
-  * points modulo 1e9+7 — plain modular arithmetic reproducible
-  * verbatim in any engine's SQL (`list_reduce` over `ascii(c)` in
-  * DuckDB), which is what lets the LSH-family queries carry a full
-  * external oracle instead of a rows-only check. xxhash64 remains the
-  * production default (better mixing, fewer collisions); these exist so
-  * correctness of the banding/blocking dataflow is externally
-  * verifiable end-to-end.
+  * Same one-pass native shape as [[SimHash64]], but the per-element
+  * hash is a base-31 polynomial over Unicode code points modulo 1e9+7
+  * (paired with a base-131 family mod 1e9+9 for the wide gram keys) —
+  * plain modular arithmetic reproducible verbatim in any engine's SQL
+  * (`list_reduce` over `ascii(c)` in DuckDB), which is what lets the
+  * LSH-family queries carry a full external oracle. DuckDB 1.0.0 has
+  * no `xxhash64`, so an xxhash64 family could never be oracle-checked.
   */
 object PolyHash {
 
@@ -47,45 +45,6 @@ object PolyHash {
   def multiplier(i: Int): Long =
     ((i.toLong * 1103515245L + 12345L) % (P - 1L)) + 1L
   def offset(i: Int): Long = (i.toLong * 69069L + 7L) % P
-
-  def minhash(shingles: ArrayData, k: Int): Array[Long] = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    val n = shingles.numElements()
-    var i = 0
-    while (i < n) {
-      if (!shingles.isNullAt(i)) {
-        val h = hashString(shingles.getUTF8String(i))
-        var j = 0
-        while (j < k) {
-          val v = (multiplier(j) * h + offset(j)) % P
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    mins
-  }
-
-  /** Minhash over PRE-hashed elements (values already in [0, P)). */
-  def minhashLongs(hashes: ArrayData, k: Int): Array[Long] = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    val n = hashes.numElements()
-    var i = 0
-    while (i < n) {
-      if (!hashes.isNullAt(i)) {
-        val h = hashes.getLong(i)
-        var j = 0
-        while (j < k) {
-          val v = (multiplier(j) * h + offset(j)) % P
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    mins
-  }
 
   /** Minhash over WIDE gram keys ([[shingleHashes]] /
     * [[shingleHashesWideAll]] output, `h1 * P2 + h2`): the affine
@@ -525,67 +484,6 @@ case class PolyHashString(child: Expression) extends UnaryExpression {
       : PolyHashString = copy(newChild)
 
   override def prettyName: String = "poly_hash"
-}
-
-/** Portable minhash signature (see [[PolyHash]]). */
-case class PolyMinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string>, got ${t.simpleString(10)}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, false)
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      PolyHash.minhash(input.asInstanceOf[ArrayData], k))
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.PolyHash.minhash($c, $k))")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PolyMinHashSig = copy(child = newChild)
-
-  override def prettyName: String = "poly_minhash_sig"
-}
-
-/** Portable minhash over an already-hashed `array<long>` (values in
-  * [0, P)) — lets callers hash each shingle once, carry 8-byte keys
-  * instead of strings, and reuse the hashes for the exact-intersection
-  * verify. */
-case class PolyMinHashLongs(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<long>, got ${t.simpleString(10)}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, false)
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      PolyHash.minhashLongs(input.asInstanceOf[ArrayData], k))
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.PolyHash.minhashLongs($c, $k))")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PolyMinHashLongs = copy(child = newChild)
-
-  override def prettyName: String = "poly_minhash_longs"
 }
 
 /** Portable minhash over WIDE two-family gram keys

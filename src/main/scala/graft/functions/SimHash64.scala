@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 64-bit SimHash over a token array.
   *
-  * Semantics identical to [[graft.llm.TextFunctions.simHash]] — per
+  * Semantics identical to the test-side `HofReference.simHash` — per
   * token, xxhash64 (seed 42, matching the builtin `xxhash64`) casts a
   * +-1 vote on each of 64 bit positions; the signature sets bit b iff
   * the vote sum is positive. The HOF form evaluates 64 nested

@@ -496,7 +496,7 @@ object TextGopher {
 }
 
 /** One-pass kernel for the Gopher QUALITY-rule statistics — the fused
-  * form of [[graft.llm.TextAnalysis.gopherQualityStatsHof]], computing
+  * form of the test-side `HofReference.gopherQualityStats`, computing
   * the identical nine-counter struct in two linear scans (one over the
   * lowered text for the token-level counters, one over the raw text
   * for the symbol/line counters) instead of the HOF composition's six

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import TextFunctions._
@@ -53,36 +53,25 @@ object Dedup {
     * the band join and two id-keyed signature joins, all
     * hash-partitioned on small fixed-width keys.
     */
-  /** (id, sh, mh): distinct shingle hashes/strings + k-long minhash
-    * signature per document (shared by the batch and incremental
-    * dedup paths). */
+  /** (id, sh, mh): distinct wide gram keys + k-long minhash signature
+    * per document (shared by the batch and incremental dedup paths).
+    * `sh` carries the WIDE two-family gram keys (64-bit; bare base-31
+    * has exact polynomial identities — "c89" = "atw" — that the 100x
+    * fixture manufactured into false exact dups, caught by the 100x
+    * oracle sweep), while the minhash signatures still live in
+    * [0, 1e9+7) ⊂ int32 (the permutations run over the h1 component,
+    * so signature values are unchanged by the widening) and cross the
+    * band explode and verify-join shuffles at half the width. */
   private def minhashSigs(docs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, k: Int,
-      portable: Boolean): DataFrame = {
-    val shExpr: org.apache.spark.sql.Column =
-      if (portable)
-        graft.functions.GraftFunctions
-          .polyShingleHashes(col(textCol), shingleN)
-      else shingles(col(textCol), shingleN)
-    val sigs = graft.core.Partitioning.ensureWidth(docs).select(
-      col(idCol).as("id"), shExpr.as("sh"))
+      textCol: String, shingleN: Int, k: Int): DataFrame =
+    graft.core.Partitioning.ensureWidth(docs).select(
+      col(idCol).as("id"),
+      graft.functions.GraftFunctions
+        .polyShingleHashes(col(textCol), shingleN).as("sh"))
       .withColumn("mh",
-        if (portable)
-          graft.functions.GraftFunctions.polyMinhashWide(col("sh"), k)
-        else graft.functions.GraftFunctions.minhashSig(col("sh"), k))
-    // Portable layout: `sh` carries the WIDE two-family gram keys
-    // (64-bit; bare base-31 has exact polynomial identities — "c89" =
-    // "atw" — that the 100x fixture manufactured into false exact
-    // dups, caught by the 100x oracle sweep), while the minhash
-    // signatures still live in [0, 1e9+7) ⊂ int32 (the permutations
-    // run over the h1 component, so signature values are unchanged by
-    // the widening) and cross the band explode and verify-join
-    // shuffles at half the width.
-    if (portable)
-      sigs.select(col("id"), col("sh"),
+        graft.functions.GraftFunctions.polyMinhashWide(col("sh"), k))
+      .select(col("id"), col("sh"),
         col("mh").cast("array<int>").as("mh"))
-    else sigs
-  }
 
   /** (id, band_idx, band_hash) exploded band buckets of signatures.
     *
@@ -107,14 +96,11 @@ object Dedup {
     * and the sizes side is one row per OCCUPIED bucket, so the cap's
     * own cost stays linear at any scale. */
   private def bandBuckets(sigs: DataFrame, bands: Int,
-      rowsPerBand: Int, portable: Boolean,
-      maxBucket: Int = 0): DataFrame = {
-    val bandExpr =
-      if (portable) polyBands(col("mh"), bands, rowsPerBand)
-      else lshBands(col("mh"), bands, rowsPerBand)
+      rowsPerBand: Int, maxBucket: Int = 0): DataFrame = {
     if (maxBucket <= 0) {
       sigs
-        .select(col("id"), posexplode(bandExpr))
+        .select(col("id"),
+          posexplode(polyBands(col("mh"), bands, rowsPerBand)))
         .withColumnRenamed("pos", "band_idx")
         .withColumnRenamed("col", "band_hash")
     } else {
@@ -130,7 +116,7 @@ object Dedup {
       // execCPU there (d29 45.6 -> 139.9 s at sf0.1 — the pair-join
       // and lookup stages stop sharing map work once the union agg
       // pins the exchanges) — kept as-is.
-      val base = bandBucketsWide(sigs, bands, rowsPerBand, portable)
+      val base = bandBucketsWide(sigs, bands, rowsPerBand)
         .repartition(col("band_idx"), col("band_hash"))
       rekeyOversized(base,
         base.select("band_idx", "band_hash"), maxBucket)
@@ -143,20 +129,15 @@ object Dedup {
     * whose occupancy is counted over the UNION of both sides).
     * Widened key = the band fold over ALL k components (the maximum
     * width the signature family offers, as the embedding cap widens
-    * to all 64 planes): the portable form restates in DuckDB exactly
-    * like polyBands with one band of k rows. */
+    * to all 64 planes): restates in DuckDB exactly like polyBands
+    * with one band of k rows. */
   private def bandBucketsWide(sigs: DataFrame, bands: Int,
-      rowsPerBand: Int, portable: Boolean): DataFrame = {
-    val bandExpr =
-      if (portable) polyBands(col("mh"), bands, rowsPerBand)
-      else lshBands(col("mh"), bands, rowsPerBand)
-    val wideExpr =
-      if (portable)
-        aggregate(col("mh"), lit(0L),
-          (acc, v) => (acc * 31L + v) % graft.functions.PolyHash.P)
-      else xxhash64(col("mh"))
+      rowsPerBand: Int): DataFrame = {
+    val wideExpr = aggregate(col("mh"), lit(0L),
+      (acc, v) => (acc * 31L + v) % graft.functions.PolyHash.P)
     sigs
-      .select(col("id"), posexplode(bandExpr), wideExpr.as("_wide0"))
+      .select(col("id"), posexplode(polyBands(col("mh"), bands,
+        rowsPerBand)), wideExpr.as("_wide0"))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
   }
@@ -182,6 +163,22 @@ object Dedup {
       .drop("_bucket_n", "_wide0")
   }
 
+  /** Fraction of agreeing signature components of a candidate pair's
+    * `mh_a`/`mh_b` — the unbiased minhash estimate of its Jaccard. */
+  private def signatureEstimate(k: Int): Column =
+    size(filter(zip_with(col("mh_a"), col("mh_b"),
+      (x, y) => x === y), e => e)).cast("double") / k
+
+  /** Exact Jaccard of `sh_a`/`sh_b` for pairs whose signature estimate
+    * clears half the threshold, else -1: prefilter and verify fused
+    * into one native loop pair. HOFs evaluate interpreted, and the
+    * verify runs once per candidate pair, so its constant factor
+    * dominates adversarial corpora. Its HOF composition is pinned
+    * equal in DedupSimilaritySpec. */
+  private def verify(k: Int, threshold: Double): Column =
+    graft.functions.GraftFunctions.minhashJaccardVerify(
+      col("mh_a"), col("mh_b"), col("sh_a"), col("sh_b"), k, threshold)
+
   /** `maxBucket > 0` bounds per-band-bucket candidate volume on
     * band-degenerate corpora by re-keying oversized buckets with the
     * full-signature fold (see [[bandBuckets]] — bounded recall, off
@@ -203,8 +200,7 @@ object Dedup {
   def minhashPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 5, bands: Int = 8,
       rowsPerBand: Int = 4, threshold: Double = 0.5,
-      portable: Boolean = false, maxBucket: Int = 0,
-      estimateOnly: Boolean = false): DataFrame = {
+      maxBucket: Int = 0, estimateOnly: Boolean = false): DataFrame = {
     val k = bands * rowsPerBand
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // The signature subtree feeds the band explode and two pair-side
@@ -214,17 +210,16 @@ object Dedup {
     // 13.3 s vs cached min 19.5 s / median 21.9 s; at sf0.1 2.2 s vs
     // 2.8 s. ReuseExchange still dedupes the exchange where consumers
     // share partitioning (same conclusion as the d04 index, below).
-    // Portable mode hashes each shingle ONCE to the wide two-family
-    // 64-bit gram key via the fused rolling-hash expression
+    // Each shingle is hashed ONCE to the wide two-family 64-bit gram
+    // key via the fused rolling-hash expression
     // (normalize+shingle+hash in one pass, no intermediate arrays):
     // signatures come from affine permutations of the key's h1
     // component, and the exact verify intersects the 8-byte key
     // arrays instead of strings — fixed-width shuffles, cheaper
     // comparisons, same oracle-exact semantics (the oracle hashes its
     // distinct gram strings with the identical two-family pack).
-    val sigs = minhashSigs(docs, idCol, textCol, shingleN, k, portable)
-    val buckets = bandBuckets(sigs, bands, rowsPerBand, portable,
-      maxBucket)
+    val sigs = minhashSigs(docs, idCol, textCol, shingleN, k)
+    val buckets = bandBuckets(sigs, bands, rowsPerBand, maxBucket)
     // Corpus-sized self-join: force sort-merge (AQE upgrades it back
     // to broadcast at runtime when the fixture is genuinely small).
     // Catalyst's static size estimate for the exploded band rows is
@@ -259,14 +254,6 @@ object Dedup {
     // bounded as data grows. Either hint also keeps Catalyst from
     // broadcasting the corpus side on a bad array-column estimate —
     // backwards at any scale.
-    // Portable mode fuses estimate + verify into one native loop pair
-    // (HOFs evaluate interpreted; the verify runs once per candidate
-    // pair, so its constant factor dominates adversarial corpora).
-    // The HOF composition below is the semantics both must satisfy,
-    // pinned equal in DedupSimilaritySpec.
-    val est =
-      size(filter(zip_with(col("mh_a"), col("mh_b"),
-        (x, y) => x === y), e => e)).cast("double") / k
     if (estimateOnly) {
       // Signatures only — the gram-key arrays never join the pair
       // stream (the whole point; see the scaladoc).
@@ -275,24 +262,16 @@ object Dedup {
           col("mh").as("mh_a")), "id_a")
         .join(sigs.select(col("id").as("id_b"),
           col("mh").as("mh_b")).hint("shuffle_hash"), "id_b")
-        .withColumn("jaccard", est)
+        .withColumn("jaccard", signatureEstimate(k))
         .where(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     }
-    val verified =
-      if (portable)
-        graft.functions.GraftFunctions.minhashJaccardVerify(
-          col("mh_a"), col("mh_b"), col("sh_a"), col("sh_b"),
-          k, threshold)
-      else
-        when(est >= threshold * 0.5, jaccard(col("sh_a"), col("sh_b")))
-          .otherwise(lit(-1d))
     pairs.hint("shuffle_hash")
       .join(sigs.select(col("id").as("id_a"), col("mh").as("mh_a"),
         col("sh").as("sh_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("mh").as("mh_b"),
         col("sh").as("sh_b")).hint("shuffle_hash"), "id_b")
-      .withColumn("jaccard", verified)
+      .withColumn("jaccard", verify(k, threshold))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -328,21 +307,19 @@ object Dedup {
   def minhashPairsIncremental(corpus: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       shingleN: Int = 5, bands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.5, portable: Boolean = false,
-      maxBucket: Int = 0, estimateOnly: Boolean = false): DataFrame = {
+      threshold: Double = 0.5, maxBucket: Int = 0,
+      estimateOnly: Boolean = false): DataFrame = {
     val k = bands * rowsPerBand
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cSigs = minhashSigs(corpus, idCol, textCol, shingleN, k,
-      portable)
-    val bSigs = minhashSigs(batch, idCol, textCol, shingleN, k,
-      portable)
+    val cSigs = minhashSigs(corpus, idCol, textCol, shingleN, k)
+    val bSigs = minhashSigs(batch, idCol, textCol, shingleN, k)
     val (cBands, bBands) =
       if (maxBucket <= 0)
-        (bandBuckets(cSigs, bands, rowsPerBand, portable),
-          bandBuckets(bSigs, bands, rowsPerBand, portable))
+        (bandBuckets(cSigs, bands, rowsPerBand),
+          bandBuckets(bSigs, bands, rowsPerBand))
       else {
-        val c0 = bandBucketsWide(cSigs, bands, rowsPerBand, portable)
-        val b0 = bandBucketsWide(bSigs, bands, rowsPerBand, portable)
+        val c0 = bandBucketsWide(cSigs, bands, rowsPerBand)
+        val b0 = bandBucketsWide(bSigs, bands, rowsPerBand)
         val occupancy = c0.select("band_idx", "band_hash")
           .unionByName(b0.select("band_idx", "band_hash"))
         (rekeyOversized(c0, occupancy, maxBucket),
@@ -359,27 +336,16 @@ object Dedup {
         bucketCond && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id_corpus"), col("b.id").as("id_batch"))
       .distinct()
-    val est =
-      size(filter(zip_with(col("mh_a"), col("mh_b"),
-        (x, y) => x === y), e => e)).cast("double") / k
     if (estimateOnly) {
       return pairs.hint("shuffle_hash")
         .join(cSigs.select(col("id").as("id_corpus"),
           col("mh").as("mh_a")), "id_corpus")
         .join(bSigs.select(col("id").as("id_batch"),
           col("mh").as("mh_b")).hint("shuffle_hash"), "id_batch")
-        .withColumn("jaccard", est)
+        .withColumn("jaccard", signatureEstimate(k))
         .where(col("jaccard") >= threshold)
         .select("id_corpus", "id_batch", "jaccard")
     }
-    val verified =
-      if (portable)
-        graft.functions.GraftFunctions.minhashJaccardVerify(
-          col("mh_a"), col("mh_b"), col("sh_a"), col("sh_b"),
-          k, threshold)
-      else
-        when(est >= threshold * 0.5, jaccard(col("sh_a"), col("sh_b")))
-          .otherwise(lit(-1d))
     // Same asymmetric hint discipline as [[minhashPairs]]: first
     // lookup builds from the narrow pair stream; second builds from
     // the signature table (here the BATCH side — small by definition),
@@ -390,7 +356,7 @@ object Dedup {
       .join(bSigs.select(col("id").as("id_batch"),
         col("mh").as("mh_b"), col("sh").as("sh_b"))
         .hint("shuffle_hash"), "id_batch")
-      .withColumn("jaccard", verified)
+      .withColumn("jaccard", verify(k, threshold))
       .where(col("jaccard") >= threshold)
       .select("id_corpus", "id_batch", "jaccard")
   }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Deterministic weighted domain mixing — the "sample source s at
@@ -14,21 +14,15 @@ import org.apache.spark.sql.functions._
   * touching other domains, and the SAME predicate can be pushed to a
   * parquet scan.
   *
-  * Two hash variants: [[keep]] (xxhash64 — production: full 64-bit
-  * mixing, no rate-vs-id correlation) and [[keepPortable]] (LCG step
-  * mod 2^31 — plain modular arithmetic restatable in any engine's
-  * SQL, used by the gated query exactly like the portable minhash
-  * family).
+  * The hash is an LCG step mod 2^31 ([[keepPortable]]) — plain
+  * modular arithmetic restatable in any engine's SQL, so every query
+  * that mixes carries a full DuckDB oracle.
   */
 object Mixing {
 
   private val M: Long = 1000000L
 
-  /** Production keep-predicate: xxhash64-mixed id against the rate. */
-  def keep(id: Column, rate: Column): Column =
-    pmod(xxhash64(id), lit(M)) < floor(rate * M).cast("long")
-
-  /** Oracle-portable keep-predicate (LCG step; same fraction kept).
+  /** Oracle-portable keep-predicate (LCG step).
     *
     * Defined for the FULL int64 id domain: the id is first reduced to
     * a non-negative residue mod 2^31 (`pmod`, so negative ids land in
@@ -43,9 +37,4 @@ object Mixing {
     pmod(pmod(id, m) * 1103515245L + 12345L, m) % M <
       floor(rate * M).cast("long")
   }
-
-  /** Filtered frame: rows surviving the mix at their row's rate. */
-  def sampleByRate(df: DataFrame, id: Column, rate: Column,
-      portable: Boolean = false): DataFrame =
-    df.where(if (portable) keepPortable(id, rate) else keep(id, rate))
 }

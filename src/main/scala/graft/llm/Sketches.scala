@@ -28,7 +28,7 @@ import graft.functions.PolyHash
 object Sketches {
 
   /** `h` column for a (already normalized) term — the native fused
-    * form of [[TextFunctions.rollingFingerprint]]'s arithmetic
+    * form of the base-31 rolling fingerprint arithmetic
     * (callers register [[graft.functions.GraftFunctions]] first). */
   private def termHash(term: Column): Column =
     graft.functions.GraftFunctions.polyHash(term)

@@ -174,7 +174,7 @@ object TextAnalysis {
     *
     * Computed by the fused one-pass kernel
     * ([[graft.functions.TextGopherQuality]]) — the HOF composition it
-    * replaced ([[gopherQualityStatsHof]], kept as the executable
+    * replaced (`HofReference.gopherQualityStats`, the executable
     * reference `TextAnalysisSpec` pins the kernel against) spent six
     * regex/HOF passes per document, the per-token interpreted `rlike`
     * filter dominating (the [[qualityFromStats]] lesson; paired
@@ -184,35 +184,6 @@ object TextAnalysis {
     * [[graft.functions.GraftFunctions]]. */
   def gopherQualityStats(text: Column): Column =
     graft.functions.GraftFunctions.textGopherQuality(text)
-
-  /** The original HOF/regex composition of [[gopherQualityStats]] —
-    * the executable specification of the kernel's semantics
-    * (equivalence pinned in `TextAnalysisSpec`); not on any query
-    * path. */
-  private[graft] def gopherQualityStatsHof(text: Column): Column = {
-    val tk = filter(tokens(text), t => length(t) > 0)
-    val lines = split(text, "\n")
-    val bullet = "^[\u2022\u2023\u25aa*-]"
-    val ell = "(\\.{3}|\u2026)$"
-    struct(
-      size(tk).cast("long").as("n_words"),
-      coalesce(aggregate(tk, lit(0L), (acc, x) => acc + length(x)),
-        lit(0L)).as("n_word_chars"),
-      size(filter(tk, x => x.rlike("\\p{L}"))).cast("long")
-        .as("alpha_words"),
-      call_function("regexp_count", text, lit("#")).cast("long")
-        .as("hash_cnt"),
-      call_function("regexp_count", text, lit("\\.{3}|\u2026"))
-        .cast("long").as("ellipsis_cnt"),
-      size(lines).cast("long").as("n_lines"),
-      size(filter(lines, l => ltrim(l).rlike(bullet))).cast("long")
-        .as("bullet_lines"),
-      size(filter(lines, l => rtrim(l).rlike(ell))).cast("long")
-        .as("ellipsis_lines"),
-      gopherStopwords.map(w =>
-        when(array_contains(tk, w), 1L).otherwise(0L))
-        .reduce(_ + _).as("stop_hits"))
-  }
 
   /** The Gopher quality keep verdict over a [[gopherQualityStats]]
     * struct — the published removal rules inverted, every ratio

@@ -21,107 +21,22 @@ object TextFunctions {
   /** Whitespace tokens of the normalized text. */
   def tokens(text: Column): Column = split(normalizeText(text), " ")
 
-  /** Character n-gram shingles (distinct) of the normalized text.
-    * Short texts (< n chars) yield a single whole-text shingle. */
-  def shingles(text: Column, n: Int): Column = {
-    val t = normalizeText(text)
-    array_distinct(
-      when(length(t) < n, array(t)).otherwise(
-        transform(sequence(lit(0), length(t) - n),
-          i => t.substr(i + 1, lit(n)))))
-  }
-
-  /** Word w-shingles (distinct): joined runs of w consecutive tokens. */
-  def wordShingles(text: Column, w: Int): Column = {
-    val tk = tokens(text)
-    array_distinct(
-      when(size(tk) < w, array(array_join(tk, " "))).otherwise(
-        transform(sequence(lit(0), size(tk) - w),
-          i => array_join(slice(tk, i + 1, lit(w)), " "))))
-  }
-
-  /** MinHash signature: k independent min-hashes over a shingle array.
-    * Seed diversification via xxhash64(seed, shingle); one expression
-    * tree, no explode/shuffle — the signature is computed in a single
-    * narrow pass per document. */
-  def minHash(shingleArr: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      seed => array_min(transform(shingleArr, sh => xxhash64(seed, sh))))
-
-  /** LSH band signatures: the minhash vector split into `bands` bands of
-    * `rows` values, each band hashed to one long. Two documents collide
-    * on a band iff that band's minhashes are identical. */
-  def lshBands(minhashes: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(minhashes, b * rows + 1, lit(rows))))
-
-  /** Portable band signatures: base-31 fold of each band's components
-    * mod 1e9+7 — same collision semantics as [[lshBands]] (cross-band
-    * hashes are keyed by band index anyway), restatable in external
-    * SQL. Components are < 1e9+7 so the fold never overflows int64. */
+  /** Band keys of a minhash signature: the base-31 fold of each band's
+    * `rows` components mod 1e9+7, restatable in external SQL.
+    * Components are < 1e9+7 so the fold never overflows int64. Two
+    * documents that agree on a band always share its key; cross-band
+    * keys never meet because buckets are keyed by band index too.
+    *
+    * The key lies in [0, P), P ≈ 2^30, so two documents that DISAGREE
+    * on a band still share its key with probability ≈ 1/P. Verification
+    * drops those pairs, so the output does not depend on it, but
+    * spurious candidates grow as N^2/P per band with corpus size N. */
   def polyBands(minhashes: Column, bands: Int, rows: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => aggregate(slice(minhashes, b * rows + 1, lit(rows)),
         lit(0L),
         (acc, v) => (acc * 31L + v) % graft.functions.PolyHash.P))
 
-  /** Exact Jaccard similarity of two (distinct-element) arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = (size(a) + size(b)).cast("double") - inter
-    when(union === 0d, lit(1d)).otherwise(inter / union)
-  }
-
-  /** 64-bit SimHash over a token array: per bit, the sign of the sum of
-    * +-1 votes from each token hash. Pure SQL expression (dynamic shift
-    * amounts need the SQL form of shiftright). */
-  def simHash(tokensCol: Column): Column = {
-    val hashes = transform(tokensCol, t => xxhash64(t))
-    // For each bit b: sum of (bit set ? 1 : -1) over token hashes;
-    // simhash bit b = 1 iff the sum is positive.
-    aggregate(
-      filter(
-        transform(sequence(lit(0), lit(63)), b =>
-          when(
-            aggregate(hashes, lit(0L),
-              (acc, h) => acc +
-                when(expr_bit(h, b) === 1, 1L).otherwise(-1L))
-              > 0L, b).otherwise(lit(null).cast("int"))),
-        x => x.isNotNull),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(shiftleft_dyn(lit(1L), b)))
-  }
-
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  private def expr_bit(h: Column, b: Column): Column =
-    shiftright_dyn(h, b).bitwiseAND(lit(1L))
-
-  // functions.shiftright/shiftleft take Int amounts only; the underlying
-  // SQL expressions accept column amounts.
-  private def shiftright_dyn(e: Column, amount: Column): Column =
-    call_function("shiftright", e, amount)
-  private def shiftleft_dyn(e: Column, amount: Column): Column =
-    call_function("shiftleft", e, amount)
-
-  /** Polynomial rolling-hash fingerprint of the normalized text
-    * (base-31 modulo 1e9+7 — modular so the same arithmetic is exact in
-    * any engine; no dependence on 64-bit wraparound). */
-  def rollingFingerprint(text: Column): Column =
-    aggregate(split(normalizeText(text), ""), lit(0L),
-      (acc, ch) => (acc * lit(31L) + ascii(ch).cast("long"))
-        % lit(1000000007L))
-
-  /** Cosine similarity of two float-array embeddings (zip_with dot
-    * product + aggregate norms); null-safe for zero vectors. */
-  def cosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p * q),
-        lit(0.0d), (acc, v) => acc + v)
-    val na = sqrt(dot(a, a))
-    val nb = sqrt(dot(b, b))
-    when(na === 0d || nb === 0d, lit(0d))
-      .otherwise(dot(a, b) / (na * nb))
-  }
 }

@@ -8,12 +8,11 @@ import graft.llm.{Bpe, Chunking, Contamination, Dedup, Importance, LanguageModel
 /** LLM-data-pipeline operator surface (north star,
   * `BASELINE.json`): dedup family, similarity search, text analysis,
   * multimodal-column plumbing — over the `documents` / `embeddings`
-  * fixtures. Every query carries a full DuckDB oracle: the hash-family
-  * queries run their gated form on the portable polynomial hash
-  * ([[graft.functions.PolyHash]], restated verbatim in DuckDB list
-  * SQL), plan-time constants (hyperplane signs, affine coefficients)
-  * are baked identically into the generated oracle text, and xxhash64
-  * remains the production default verified by ScalaTest.
+  * fixtures. Every query carries a full DuckDB oracle: the minhash and
+  * mixing operators have a single hash family, the portable polynomial
+  * hash ([[graft.functions.PolyHash]], restated verbatim in DuckDB list
+  * SQL), and plan-time constants (hyperplane signs, affine
+  * coefficients) are baked identically into the generated oracle text.
   */
 object LlmQueries {
 
@@ -81,12 +80,12 @@ object LlmQueries {
         .orderBy("content_hash")
     }),
 
-    // MinHash+LSH near-dup pairs. Gated on the portable polynomial
-    // hash (full oracle restates the banding in DuckDB list algebra);
-    // xxhash64 stays the production default in Dedup.minhashPairs.
+    // MinHash+LSH near-dup pairs on the polynomial hash, the only
+    // minhash family (the full oracle restates the banding in DuckDB
+    // list algebra).
     "d02_minhash_pairs" -> ((s, dir) => {
       Dedup.minhashPairs(docs(s, dir), shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.3, portable = true)
+        rowsPerBand = 4, threshold = 0.3)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_a", "id_b")
     }),
@@ -106,8 +105,7 @@ object LlmQueries {
     // outputs are pinned unchanged in DedupSimilaritySpec.
     "d23_minhash_pairs_capped" -> ((s, dir) => {
       Dedup.minhashPairs(docs(s, dir), shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.1, portable = true,
-        maxBucket = 2)
+        rowsPerBand = 4, threshold = 0.1, maxBucket = 2)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_a", "id_b")
     }),
@@ -126,8 +124,7 @@ object LlmQueries {
     "d27_minhash_survivors_capped" -> ((s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.minhashPairs(d, shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.1, portable = true,
-        maxBucket = 2)
+        rowsPerBand = 4, threshold = 0.1, maxBucket = 2)
       Dedup.survivors(d, pairs)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy("doc_id")
@@ -144,7 +141,7 @@ object LlmQueries {
     "d28_minhash_survivors_estimated" -> ((s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.minhashPairs(d, shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.1, portable = true,
+        rowsPerBand = 4, threshold = 0.1,
         maxBucket = 2, estimateOnly = true)
       Dedup.survivors(d, pairs)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -186,8 +183,7 @@ object LlmQueries {
       // its hash joins). Revisit only if the consumer count grows.
       val survivors = d.join(keepers.hint("shuffle_hash"), "doc_id")
       Dedup.minhashPairs(survivors, shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.3, portable = true,
-        maxBucket = 64)
+        rowsPerBand = 4, threshold = 0.3, maxBucket = 64)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_a", "id_b")
     }),
@@ -199,7 +195,7 @@ object LlmQueries {
       val corpus = docs(s, dir).where(col("doc_id") % 5 =!= 0)
       val batch = docs(s, dir).where(col("doc_id") % 5 === 0)
       Dedup.minhashPairsIncremental(corpus, batch, shingleN = 8,
-        bands = 16, rowsPerBand = 4, threshold = 0.3, portable = true)
+        bands = 16, rowsPerBand = 4, threshold = 0.3)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_corpus", "id_batch")
     }),
@@ -218,7 +214,7 @@ object LlmQueries {
       val corpus = docs(s, dir).where(col("doc_id") % 5 =!= 0)
       val batch = docs(s, dir).where(col("doc_id") % 5 === 0)
       Dedup.minhashPairsIncremental(corpus, batch, shingleN = 8,
-        bands = 16, rowsPerBand = 4, threshold = 0.1, portable = true,
+        bands = 16, rowsPerBand = 4, threshold = 0.1,
         maxBucket = 2, estimateOnly = true)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_corpus", "id_batch")
@@ -257,8 +253,7 @@ object LlmQueries {
       val corpus = docs(s, dir).where(col("doc_id") % 5 =!= 0)
       val batch = docs(s, dir).where(col("doc_id") % 5 === 0)
       Dedup.minhashPairsIncremental(corpus, batch, shingleN = 8,
-        bands = 16, rowsPerBand = 4, threshold = 0.3, portable = true,
-        maxBucket = 2)
+        bands = 16, rowsPerBand = 4, threshold = 0.3, maxBucket = 2)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_corpus", "id_batch")
     }),
@@ -350,7 +345,7 @@ object LlmQueries {
     "d14_minhash_witness" -> ((s, dir) => {
       val sample = docs(s, dir).where(col("doc_id") % 31 === 7)
       Dedup.minhashPairs(sample, shingleN = 8, bands = 16,
-        rowsPerBand = 4, threshold = 0.3, portable = true)
+        rowsPerBand = 4, threshold = 0.3)
         .agg(
           count(lit(1)).as("n_pairs"),
           coalesce(sum((col("id_a") * 1000003L + col("id_b"))
@@ -728,8 +723,8 @@ object LlmQueries {
 
     // Deterministic weighted domain mixing: each source samples at a
     // rate derived from its numeric suffix; the keep predicate is the
-    // portable LCG threshold (production variant uses xxhash64). The
-    // realized per-source rates gate the whole decision function.
+    // portable LCG threshold. The realized per-source rates gate the
+    // whole decision function.
     "t14_domain_mix" -> ((s, dir) => {
       val src = docs(s, dir)
         .withColumn("srcn",

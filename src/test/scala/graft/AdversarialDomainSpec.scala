@@ -165,7 +165,7 @@ class AdversarialDomainSpec extends SparkSpec {
     assert(sh.contains((1L, 2L)),
       "empty docs share the all-zero signature")
     val mh = Dedup.minhashPairs(docs, shingleN = 8, bands = 16,
-      rowsPerBand = 4, threshold = 0.5, portable = true)
+      rowsPerBand = 4, threshold = 0.5)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(mh.exists(p => p._1 == 3L && p._2 == 4L && p._3 == 1.0),

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.llm.TextFunctions
+import graft.llm.HofReference
 
 /** The native codegen cosine must be bit-identical to the
   * higher-order-function composition it replaces (same accumulation
@@ -21,7 +21,7 @@ class ArrayCosineSpec extends SparkSpec {
     }.toDF("id", "a", "b")
     val out = rows.select(
       GraftFunctions.arrayCosine(col("a"), col("b")).as("native"),
-      TextFunctions.cosine(col("a"), col("b")).as("hof"))
+      HofReference.cosine(col("a"), col("b")).as("hof"))
       .as[(Double, Double)].collect()
     out.foreach { case (n, h) =>
       assert(n == h, s"native $n != hof $h")

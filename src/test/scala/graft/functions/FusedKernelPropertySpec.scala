@@ -5,7 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.llm.{TextAnalysis, TextFunctions}
+import graft.llm.{HofReference, TextAnalysis}
 
 /** Randomized equivalence of the fused native kernels against the
   * higher-order-function compositions they replaced. The fixed-case
@@ -109,7 +109,7 @@ class FusedKernelPropertySpec extends SparkSpec {
       (x, y) => x === y), e => e)).cast("double") / k
     val out = df.select(
       when(est >= thr * 0.5,
-        TextFunctions.jaccard(col("sh_a"), col("sh_b")))
+        HofReference.jaccard(col("sh_a"), col("sh_b")))
         .otherwise(lit(-1d)).as("hof"),
       GraftFunctions.minhashJaccardVerify(col("mh_a"), col("mh_b"),
         col("sh_a"), col("sh_b"), k, thr).as("fused"))

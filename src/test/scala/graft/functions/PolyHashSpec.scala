@@ -27,7 +27,7 @@ class PolyHashSpec extends SparkSpec {
       GraftFunctions.polyHash(
         graft.llm.TextFunctions.normalizeText(col("text")))
         .as("native"),
-      graft.llm.TextFunctions.rollingFingerprint(col("text"))
+      graft.llm.HofReference.rollingFingerprint(col("text"))
         .as("hof"))
       .as[(Long, Long)].collect()
     out.foreach { case (n, h) => assert(n == h) }
@@ -74,7 +74,7 @@ class PolyHashSpec extends SparkSpec {
     for (n <- Seq(3, 5, 8)) {
       val out = rows.select(
         GraftFunctions.polyShingleHashes(col("text"), n).as("native"),
-        graft.llm.TextFunctions.shingles(col("text"), n).as("grams"))
+        graft.llm.HofReference.shingles(col("text"), n).as("grams"))
         .as[(Seq[Long], Seq[String])].collect()
       out.foreach { case (nat, grams) =>
         assert(nat == grams.map(wideKey),
@@ -89,25 +89,32 @@ class PolyHashSpec extends SparkSpec {
 
   test("poly minhash equals per-seed model; values stay below P") {
     GraftFunctions.register(spark)
+    // The kernel chain d02/d08 run: minhash over the fused wide gram
+    // keys. Its permutations read only the base-31 component
+    // h1 = key / P2, so the model hashes each distinct gram STRING
+    // with base 31 alone ("c89"/"atw" share h1 and must still agree).
     val rnd = new scala.util.Random(11)
-    val words = Vector("alpha", "beta", "gamma", "delta", "x", "longish",
-      "12345", "z")
-    val rows = (0 until 50).map { i =>
-      (i.toLong, (0 to rnd.nextInt(20)).map(_ =>
-        words(rnd.nextInt(words.size))).distinct)
-    }.toDF("id", "sh")
+    val rows = (Seq("", "ab", "c89 atw c89", "the quick brown fox",
+      "Été  ÉTÉ\tété") ++
+      (0 until 50).map(_ => (0 until rnd.nextInt(80))
+        .map(_ => "abcxyz 89".charAt(rnd.nextInt(9))).mkString))
+      .toDF("text")
     val k = 16
-    val out = rows.select(col("sh"),
-      GraftFunctions.polyMinhashSig(col("sh"), k).as("mh"))
-      .as[(Seq[String], Seq[Long])].collect()
-    out.foreach { case (sh, mh) =>
-      assert(mh.length == k)
-      val hs = sh.map(modelHash)
-      (0 until k).foreach { i =>
-        val expect = hs
-          .map(h => (PolyHash.multiplier(i) * h + PolyHash.offset(i)) % P)
-          .min
-        assert(mh(i) == expect && mh(i) < P)
+    for (n <- Seq(3, 5)) {
+      val out = rows.select(
+        graft.llm.HofReference.shingles(col("text"), n).as("grams"),
+        GraftFunctions.polyMinhashWide(
+          GraftFunctions.polyShingleHashes(col("text"), n), k).as("mh"))
+        .as[(Seq[String], Seq[Long])].collect()
+      out.foreach { case (grams, mh) =>
+        assert(mh.length == k)
+        val hs = grams.map(modelHash)
+        (0 until k).foreach { i =>
+          val expect = hs
+            .map(h => (PolyHash.multiplier(i) * h + PolyHash.offset(i)) % P)
+            .min
+          assert(mh(i) == expect && mh(i) < P, s"n=$n grams=$grams i=$i")
+        }
       }
     }
   }

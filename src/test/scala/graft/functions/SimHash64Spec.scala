@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.llm.TextFunctions
+import graft.llm.HofReference
 
 /** The native one-pass simhash must equal the HOF composition exactly
   * (same xxhash64 seed, same vote/packing rules). */
@@ -22,7 +22,7 @@ class SimHash64Spec extends SparkSpec {
     }.toDF("id", "tokens")
     val out = rows.select(
       GraftFunctions.simhash64(col("tokens")).as("native"),
-      TextFunctions.simHash(col("tokens")).as("hof"))
+      HofReference.simHash(col("tokens")).as("hof"))
       .as[(Long, Long)].collect()
     out.foreach { case (n, h) => assert(n == h) }
   }

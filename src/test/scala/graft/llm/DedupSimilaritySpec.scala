@@ -136,28 +136,54 @@ class DedupSimilaritySpec extends SparkSpec {
       s"full-signature cross-pairs only, got $capped")
   }
 
-  test("minhash maxBucket cap: portable form matches the same rule") {
-    def run(mb: Int) =
-      Dedup.minhashPairs(corpus, shingleN = 3, bands = 16,
-        rowsPerBand = 2, threshold = 0.5, portable = true,
-        maxBucket = mb)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val uncapped = run(0)
-    assert(run(1000000) == uncapped)
-    val capped = run(1)
-    assert(capped.subsetOf(uncapped))
-    assert(capped == Set((1L, 2L), (4L, 5L)))
-  }
-
   test("simhash: identical docs distance 0; near-dups small distance") {
     val sigs = corpus.select(col("doc_id"),
-      TextFunctions.simHash(TextFunctions.tokens(col("text")))
+      HofReference.simHash(TextFunctions.tokens(col("text")))
         .as("sig")).as[(Long, Long)].collect().toMap
     assert(sigs(4L) == sigs(5L))
     assert(sigs(1L) == sigs(2L)) // normalization removes the diff
     assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(3L)) <= 16)
     assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(6L)) >
       java.lang.Long.bitCount(sigs(1L) ^ sigs(3L)))
+  }
+
+  test("simhashPairs 64-bit default path == driver brute force over " +
+      "the same signatures at hamming <= 3") {
+    graft.functions.GraftFunctions.register(spark)
+    // Planted near-dups: each base document appears verbatim, with a
+    // case/whitespace change, and with 1-3 random word edits; the
+    // unrelated bases pair with nothing. Four 16-bit chunks make any
+    // pair within hamming 3 share a chunk (pigeonhole), so blocking
+    // must lose no pair the brute force finds.
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 300).map(i => s"w$i")
+    val texts = (0 until 8).flatMap { _ =>
+      val base = Seq.fill(120)(vocab(rnd.nextInt(vocab.size)))
+      val edits = (1 to 3).flatMap(e => Seq.fill(2) {
+        val t = base.toArray
+        (0 until e).foreach(_ =>
+          t(rnd.nextInt(t.length)) = vocab(rnd.nextInt(vocab.size)))
+        t.mkString(" ")
+      })
+      Seq(base.mkString(" "), base.mkString("  ").toUpperCase) ++ edits
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val sigs = docs.select(col("doc_id"),
+      graft.functions.GraftFunctions.simhash64(
+        TextFunctions.tokens(col("text"))))
+      .as[(Long, Long)].collect()
+    val expected = (for {
+      (a, sa) <- sigs; (b, sb) <- sigs
+      if a < b
+      h = java.lang.Long.bitCount(sa ^ sb)
+      if h <= 3
+    } yield (a, b, h)).toSet
+    val got = Dedup.simhashPairs(docs, maxHamming = 3)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(got == expected)
+    // The planted set exercises more than exact clones.
+    assert(expected.exists(_._3 > 0), s"no near-dup pair in $expected")
   }
 
   test("ngram jaccard on informative-gram space finds near-dups") {
@@ -476,7 +502,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (x, y) => x === y), e => e)).cast("double") / k
     val out = rows.select(
       when(est >= thr * 0.5,
-        graft.llm.TextFunctions.jaccard(col("sh_a"), col("sh_b")))
+        HofReference.jaccard(col("sh_a"), col("sh_b")))
         .otherwise(lit(-1d)).as("hof"),
       GraftFunctions.minhashJaccardVerify(col("mh_a"), col("mh_b"),
         col("sh_a"), col("sh_b"), k, thr).as("fused"))

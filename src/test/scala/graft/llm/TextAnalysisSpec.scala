@@ -264,7 +264,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val fp = df.select(col("doc_id"),
       TextAnalysis.fingerprint(col("text")).as("f"),
-      TextFunctions.rollingFingerprint(col("text")).as("r"))
+      HofReference.rollingFingerprint(col("text")).as("r"))
       .as[(Long, String, Long)].collect()
       .map(t => t._1 -> (t._2, t._3)).toMap
     assert(fp(1L) == fp(2L))
@@ -327,25 +327,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(2L) == ((4, 4, 3, 1)))
     assert(out(3L) == ((1, 1, 0, 0)))
     assert(out(4L) == ((5, 2, 4, 3))) // "spam spam" x2, "spam egg" x1
-  }
-
-  test("domain mixing: deterministic, near-target rates, both hashes") {
-    val df = (1L to 4000L).toDF("id").withColumn("rate", lit(0.3))
-    for (portable <- Seq(false, true)) {
-      val kept = Mixing.sampleByRate(df, col("id"), col("rate"),
-        portable).count()
-      val rate = kept.toDouble / 4000
-      assert(math.abs(rate - 0.3) < 0.05,
-        s"portable=$portable realized $rate, want ~0.3")
-      // same rows survive a re-evaluation
-      assert(Mixing.sampleByRate(df, col("id"), col("rate"), portable)
-        .count() == kept)
-    }
-    // rate 0 keeps nothing; rate 1 keeps everything
-    assert(Mixing.sampleByRate(
-      df.withColumn("rate", lit(0.0)), col("id"), col("rate")).count() == 0)
-    assert(Mixing.sampleByRate(
-      df.withColumn("rate", lit(1.0)), col("id"), col("rate")).count() == 4000)
   }
 
   test("quality features append the documented columns") {
@@ -763,7 +744,7 @@ class TextAnalysisSpec extends SparkSpec {
     val kernel = collectStats(
       TextAnalysis.gopherQualityStats(col("text")))
     val hof = collectStats(
-      TextAnalysis.gopherQualityStatsHof(col("text")))
+      HofReference.gopherQualityStats(col("text")))
     for ((id, text) <- all)
       assert(kernel(id) == hof(id),
         s"doc $id: '${text.take(50)}' kernel=${kernel(id)} " +
